@@ -27,8 +27,8 @@ def pytest_configure(config):
         "slow: multi-minute evidence drill (composed loops, crash-replay "
         "sequences) — deselected by default so the serial suite fits an "
         "external CI/driver budget; run with --runslow (or "
-        "SPARK_GRAFT_RUN_SLOW=1) for the full suite. The full-suite "
-        "record for each round lives in PYTEST_r<N>.txt.",
+        "SPARK_GRAFT_RUN_SLOW=1) for the full suite. The latest "
+        "--runslow record is logged in CHANGES.md.",
     )
 
 
@@ -84,6 +84,12 @@ _SLOW_DRILLS = (
 )
 
 
+def _env_flag(name: str) -> bool:
+    """An on/off environment switch: unset, empty, ``0``, ``false`` and
+    ``no`` (any case) read as off; anything else as on."""
+    return os.environ.get(name, "").strip().lower() not in ("", "0", "false", "no")
+
+
 def pytest_collection_modifyitems(config, items):
     """Default-skip the ``slow`` drills (r12 verdict ask #2: the serial
     suite runs >4 h on slow containers and the external test gate times
@@ -93,11 +99,11 @@ def pytest_collection_modifyitems(config, items):
     for item in items:
         if any(p in item.nodeid for p in _SLOW_DRILLS):
             item.add_marker(pytest.mark.slow)
-    if config.getoption("--runslow") or os.environ.get("SPARK_GRAFT_RUN_SLOW"):
+    if config.getoption("--runslow") or _env_flag("SPARK_GRAFT_RUN_SLOW"):
         return
     skip = pytest.mark.skip(
         reason="slow evidence drill — run with --runslow "
-        "(full-suite record: PYTEST_r13.txt)"
+        "(latest --runslow record: CHANGES.md)"
     )
     for item in items:
         if "slow" in item.keywords:

@@ -14,18 +14,31 @@ These are the LLM-training-pipeline operators the reference lacks but a
   join, whose key cardinality is bounded by design.
 * **Exact dedup groups by digest, not by text** — the shuffle key is 16
   bytes instead of the document body.
+* **One candidate-pair core.** The bucket self-join, the store probe, the
+  payload verify and the span merge live in
+  :mod:`~connect_server_spark.operators._pairs`; each family here owns
+  only how it derives its keys and its score.
 """
 
 from __future__ import annotations
 
 import functools
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from connect_server_spark.execution import stage_boundary
 
 from connect_server_spark.functions.expr import let_col, memo_expr
+from connect_server_spark.operators._pairs import (
+    cosine_pairs,
+    jaccard,
+    merge_spans,
+    overlap,
+    probe_pairs,
+    self_pairs,
+    verify,
+)
 
 __all__ = [
     "normalize_text",
@@ -246,20 +259,7 @@ def lsh_candidate_pairs(
     buckets = minhash_band_buckets(
         df, id_col, shingles_col, num_hashes, bands
     ).transform(stage_boundary)
-    left = buckets.alias("l")
-    right = buckets.alias("r")
-    return (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.band_hash") == F.col("r.band_hash"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .select(
-            F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b")
-        )
-        .distinct()
-    )
+    return self_pairs(buckets, id_col, ["band", "band_hash"])
 
 
 def jaccard_verify(
@@ -272,25 +272,9 @@ def jaccard_verify(
     """Exact Jaccard over the shingle sets of each candidate pair; keeps
     pairs with ``jaccard >= threshold``. Two hash-joins against the
     (id, shingles) projection — candidates only, never the full corpus²."""
-    sets_ = docs.select(F.col(id_col), F.col(shingles_col))
-    a = sets_.select(
-        F.col(id_col).alias("id_a"), F.col(shingles_col).alias("_sh_a")
-    )
-    b = sets_.select(
-        F.col(id_col).alias("id_b"), F.col(shingles_col).alias("_sh_b")
-    )
-    inter = F.size(F.array_intersect("_sh_a", "_sh_b"))
-    union = F.size("_sh_a") + F.size("_sh_b") - inter
-    return (
-        pairs.join(a, "id_a")
-        .join(b, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (inter.cast("double") / union).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
+    a = docs.select(F.col(id_col).alias("id_a"), F.col(shingles_col).alias("_sh_a"))
+    b = docs.select(F.col(id_col).alias("id_b"), F.col(shingles_col).alias("_sh_b"))
+    return verify(pairs, a, b, jaccard("_sh_a", "_sh_b"), threshold)
 
 
 def minhash_neardup_pairs(
@@ -381,17 +365,9 @@ def minhash_neardup_against_shingled(
     b = corpus_sh.select(
         F.col(id_col).alias("corpus_id"), F.col(shingles_col).alias("_sh_b")
     )
-    inter = F.size(F.array_intersect("_sh_a", "_sh_b"))
-    union = F.size("_sh_a") + F.size("_sh_b") - inter
-    return (
-        cands.join(a, "new_id")
-        .join(b, "corpus_id")
-        .select(
-            "new_id",
-            "corpus_id",
-            (inter.cast("double") / union).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
+    return verify(
+        cands, a, b, jaccard("_sh_a", "_sh_b"), threshold,
+        keys=("new_id", "corpus_id"),
     )
 
 
@@ -492,16 +468,10 @@ def minhash_neardup_against_index(
     plan in ``tests/test_dedup.py``). Ingest cost is O(batch) + the
     index join, vs :func:`minhash_neardup_against`'s O(corpus) rescan.
 
-    The store-join strategy is size-adaptive (one driver-side size probe
-    per store): a store still under the broadcast threshold joins
-    broadcast — the fastest shape while a corpus is small, zero Exchange
-    anywhere — and past the threshold the batch side is hinted
-    ``shuffle_hash`` with the batch as the build side: sort-merge would
-    insert an O(corpus) Sort above each store scan (appended stores have
-    several files per bucket, so the scan cannot claim sortedness); a
-    shuffled-hash join streams the store through a batch-sized hash
-    table instead. At 100 TB the stores are always past the threshold,
-    so the at-scale plan is exactly the hinted one — pinned with
+    Both store joins are size-adaptive
+    (:func:`~connect_server_spark.operators._pairs.probe_pairs`). At
+    100 TB the stores are always past the broadcast threshold, so the
+    at-scale plan is the ``shuffle_hash``-hinted one — pinned with
     broadcast disabled in ``tests/test_dedup.py``.
 
     The candidate join keys on ``band_hash`` alone — the hash already
@@ -510,12 +480,7 @@ def minhash_neardup_against_index(
     Jaccard verify scores anyway, so the output contract is unchanged:
     ``(new_id, corpus_id, jaccard)`` with ``jaccard >= threshold``,
     exactly :func:`minhash_neardup_against`'s."""
-    from connect_server_spark.storage import broadcastable, read_bucketed
-
-    def probe_side(df: DataFrame, store_path: str) -> DataFrame:
-        # small store → no hint (Catalyst broadcasts the store itself);
-        # big store → force SHJ so the store neither sorts nor shuffles
-        return df if broadcastable(spark, store_path) else df.hint("shuffle_hash")
+    from connect_server_spark.storage import read_bucketed
 
     nd = new.select(
         F.col(id_col), word_shingles(F.col(text_col), shingle_n).alias("_sh")
@@ -527,7 +492,7 @@ def minhash_neardup_against_index(
         F.col(id_col).alias("corpus_id"), "band_hash"
     )
     cands = (
-        cb.join(probe_side(nb, index_path), "band_hash")
+        probe_pairs(cb, nb, "band_hash", index_path)
         .select("new_id", "corpus_id")
         .distinct()
     )
@@ -544,16 +509,9 @@ def minhash_neardup_against_index(
         # doclens and the IVF cell store).
         .dropDuplicates(["corpus_id"])
     )
-    inter = F.size(F.array_intersect("_sh_a", "_sh_b"))
-    union = F.size("_sh_a") + F.size("_sh_b") - inter
-    return (
-        b.join(probe_side(cands.join(a, "new_id"), shingle_path), "corpus_id")
-        .select(
-            "new_id",
-            "corpus_id",
-            (inter.cast("double") / union).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
+    return verify(
+        cands, a, b, jaccard("_sh_a", "_sh_b"), threshold,
+        keys=("new_id", "corpus_id"), store_path=shingle_path,
     )
 
 
@@ -683,26 +641,13 @@ def _ngram_candidates_shingled(
             .select(id_col)
             .distinct()
         )
-    l, r = buckets.alias("l"), buckets.alias("r")
-    cond = (F.col("l._bkt") == F.col("r._bkt")) & (
-        F.col(f"l.{id_col}") < F.col(f"r.{id_col}")
-    )
-    for b in blocks:
-        cond = cond & (F.col(f"l.{b}") == F.col(f"r.{b}"))
     # Exact necessary condition of J >= t, checked on the narrow rows
     # before the expensive verify: max(|A|,|B|)·t <= min(|A|,|B|).
     ratio_ok = (
         F.greatest(F.col("l._nsh"), F.col("r._nsh")) * threshold
         <= F.least(F.col("l._nsh"), F.col("r._nsh"))
     )
-    cands = (
-        l.join(r, cond & ratio_ok)
-        .select(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
-        )
-        .distinct()
-    )
+    cands = self_pairs(buckets, id_col, ["_bkt", *blocks], extra=ratio_ok)
     if max_block_rows is not None:
         overflow_docs = shingled.join(
             oversized_ids, on=id_col, how="leftsemi"
@@ -967,22 +912,7 @@ def simhash_neardup_pairs(
             )
         ).alias("chunk", "chunk_val"),
     )
-    l, r = chunks.alias("l"), chunks.alias("r")
-    cands = (
-        l.join(
-            r,
-            (F.col("l.chunk") == F.col("r.chunk"))
-            & (F.col("l.chunk_val") == F.col("r.chunk_val"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .select(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
-            F.col("l._fp").alias("_fp_a"),
-            F.col("r._fp").alias("_fp_b"),
-        )
-        .distinct()
-    )
+    cands = self_pairs(chunks, id_col, ["chunk", "chunk_val"], carry=("_fp",))
     hamming = F.bit_count(F.col("_fp_a").bitwiseXOR(F.col("_fp_b")))
     return cands.select(
         "id_a", "id_b", hamming.alias("hamming")
@@ -1038,51 +968,24 @@ def embedding_neardup_lsh(
     srp = srp_signatures_udf(tables, bits)
     # Candidate generation joins NARROW rows: (id, table, sig) only — a
     # vector entering the bucket join would be shuffled once per table
-    # (×8) on both sides. Pairs are distinct'd BEFORE the verify, then the
-    # vectors join back in via two hash joins, so each embedding moves
-    # across the wire once and each surviving pair is scored exactly once
-    # (mirrors ``ngram_jaccard_pairs`` / ``jaccard_verify``).
+    # (×8) on both sides; the vectors join back in at the verify.
     #
-    # r13 (guide §2.4/§4 — the minhash shingle-ckpt precedent): the
-    # bucket projection feeds BOTH sides of the self-join, and Spark
-    # duplicates (never shares) a common subtree — the executed pairs
-    # plan carried TWO ArrowEvalPython stages (the SRP batch
-    # matrix-multiply ran twice per document) and two embedding scans
-    # for candidate generation alone. The lazy boundary materializes
-    # the narrow (id, table, sig) rows once; both join sides read them.
+    # The bucket projection feeds BOTH sides of the self-join, and Spark
+    # duplicates (never shares) a common subtree — without the lazy
+    # boundary the SRP batch matrix-multiply runs twice per document
+    # (two ArrowEvalPython stages, pinned to one in tests/test_dedup.py).
     buckets = stage_boundary(
         emb.select(
             F.col(id_col),
             F.posexplode(srp(F.col(vec_col))).alias("_table", "_sig"),
         )
     )
-    left = buckets.alias("l")
-    right = buckets.alias("r")
-    cands = (
-        left.join(
-            right,
-            (F.col("l._table") == F.col("r._table"))
-            & (F.col("l._sig") == F.col("r._sig"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .select(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
-        )
-        .distinct()
-    )
-    vecs = emb.select(F.col(id_col), F.col(vec_col))
-    a = vecs.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"))
-    b = vecs.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"))
-    return (
-        cands.join(a, "id_a")
-        .join(b, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            cosine_similarity(F.col("_va"), F.col("_vb")).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= threshold)
+    cands = self_pairs(buckets, id_col, ["_table", "_sig"])
+    a = emb.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"))
+    b = emb.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"))
+    return verify(
+        cands, a, b, cosine_similarity(F.col("_va"), F.col("_vb")),
+        threshold, name="cosine",
     )
 
 
@@ -1170,7 +1073,6 @@ def embedding_neardup_against_index(
     Returns ``(new_id, corpus_id, cosine)`` with ``cosine >= threshold``.
     """
     from connect_server_spark.operators.similarity import (
-        cosine_similarity,
         ivf_assign_udf,
         read_ivf_centroids,
         read_ivf_cells,
@@ -1188,11 +1090,8 @@ def embedding_neardup_against_index(
         F.explode(ivf_assign_udf(cents, nprobe)(F.col(vec_col))).alias("_cell"),
     )
     return (
-        corpus_cells.join(F.broadcast(batch_cells), "_cell")
-        .select(
-            "new_id",
-            "corpus_id",
-            cosine_similarity(F.col("_va"), F.col("_vb")).alias("cosine"),
+        cosine_pairs(
+            corpus_cells, batch_cells, "_cell", "new_id", "_va", "corpus_id", "_vb"
         )
         .distinct()
         .filter(F.col("cosine") >= threshold)
@@ -1230,10 +1129,8 @@ def duplicated_ngram_spans(
        count (plus a min≠max check instead of count-distinct's Expand
        when ``cross_doc_only``);
     3. repeated positions semi-join back (key equi-join) and merge into
-       maximal spans with the gaps-and-islands idiom: a new span starts
-       where the gap between consecutive flagged positions exceeds k —
-       a lag window + running sum + group-by, all partitioned by id, so
-       the last two steps share one Exchange.
+       maximal spans (gaps-and-islands,
+       :func:`~connect_server_spark.operators._pairs.merge_spans`).
 
     Returns (id, span_start, span_end, n_windows): token range
     [span_start, span_end) is duplicated; ``n_windows`` counts the
@@ -1254,22 +1151,7 @@ def duplicated_ngram_spans(
         else (F.col("_n") >= min_occurrences)
     ).select("key")
     flagged = exploded.join(dup, "key", "leftsemi")
-    w = Window.partitionBy("id").orderBy("pos")
-    grouped = flagged.withColumn(
-        "_new_span",
-        F.when(
-            F.col("pos") - F.lag("pos", 1).over(w) > k, F.lit(1)
-        ).otherwise(F.lit(0)),
-    ).withColumn("_grp", F.sum("_new_span").over(w))
-    return (
-        grouped.groupBy("id", "_grp")
-        .agg(
-            F.min("pos").alias("span_start"),
-            (F.max("pos") + k).alias("span_end"),
-            F.count(F.lit(1)).alias("n_windows"),
-        )
-        .select("id", "span_start", "span_end", "n_windows")
-    )
+    return merge_spans(flagged, k)
 
 
 def cut_duplicate_spans(
@@ -1397,14 +1279,13 @@ def duplicated_spans_against_index(
     minhash-index discipline), and corpus text is never scanned.
 
     Returns the same (id, span_start, span_end, n_windows) contract."""
-    from connect_server_spark.storage import broadcastable, read_bucketed
+    from connect_server_spark.storage import read_bucketed
 
     wins = _window_keys(new, id_col, text_col, k).transform(stage_boundary)
     store = read_bucketed(spark, index_path, "key", store_buckets)
-    probe = wins.select("id", "pos", "key")
-    if not broadcastable(spark, index_path):
-        probe = probe.hint("shuffle_hash")
-    vs_corpus = store.join(probe, "key").select("id", "pos")
+    vs_corpus = probe_pairs(
+        store, wins.select("id", "pos", "key"), "key", index_path
+    ).select("id", "pos")
     intra = (
         wins.groupBy("key")
         .agg(F.count(F.lit(1)).alias("_n"))
@@ -1413,22 +1294,7 @@ def duplicated_spans_against_index(
     )
     vs_batch = wins.join(intra, "key", "leftsemi").select("id", "pos")
     flagged = vs_corpus.unionByName(vs_batch).distinct()
-    w = Window.partitionBy("id").orderBy("pos")
-    grouped = flagged.withColumn(
-        "_new_span",
-        F.when(
-            F.col("pos") - F.lag("pos", 1).over(w) > k, F.lit(1)
-        ).otherwise(F.lit(0)),
-    ).withColumn("_grp", F.sum("_new_span").over(w))
-    return (
-        grouped.groupBy("id", "_grp")
-        .agg(
-            F.min("pos").alias("span_start"),
-            (F.max("pos") + k).alias("span_end"),
-            F.count(F.lit(1)).alias("n_windows"),
-        )
-        .select("id", "span_start", "span_end", "n_windows")
-    )
+    return merge_spans(flagged, k)
 
 
 # ---- Winnowing document fingerprints (Schleimer et al., SIGMOD 2003) ----
@@ -1560,37 +1426,18 @@ def winnow_neardup_pairs(
         .filter(F.col("_df") <= max_df)
         .drop("_df")
     )
-    a = posts.select(F.col("id").alias("id_a"), "fp")
-    b = posts.select(F.col("id").alias("id_b"), "fp")
-    shared = (
-        a.join(b, "fp")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("shared_rare"))
-    )
-    # exact score over the FULL sets: intersect the two fps arrays (the
-    # pair count above only covers rare fingerprints, so it is a
-    # candidate signal, not the score)
-    pairs = (
-        shared.join(
-            fps.select(F.col("id").alias("id_a"), F.col("fps").alias("_fa")),
-            "id_a",
-        )
-        .join(
-            fps.select(F.col("id").alias("id_b"), F.col("fps").alias("_fb")),
-            "id_b",
-        )
-        .withColumn(
-            "shared", F.size(F.array_intersect("_fa", "_fb")).cast("long")
-        )
-        .withColumn("n_a", F.size("_fa").cast("long"))
-        .withColumn("n_b", F.size("_fb").cast("long"))
-    )
-    jac = F.col("shared") / (F.col("n_a") + F.col("n_b") - F.col("shared"))
-    return (
-        pairs.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "shared", "n_a", "n_b", "jaccard")
+    cands = self_pairs(posts, "id", ["fp"])
+    # exact score over the FULL sets (the postings above hold only rare
+    # fingerprints, so sharing one is a candidate signal, not the score)
+    a = fps.select(F.col("id").alias("id_a"), F.col("fps").alias("_fa"))
+    b = fps.select(F.col("id").alias("id_b"), F.col("fps").alias("_fb"))
+    return verify(
+        cands, a, b, jaccard("_fa", "_fb"), threshold,
+        extra=(
+            overlap("_fa", "_fb").cast("long").alias("shared"),
+            F.size("_fa").cast("long").alias("n_a"),
+            F.size("_fb").cast("long").alias("n_b"),
+        ),
     )
 
 
@@ -1662,15 +1509,10 @@ def winnow_neardup_against_index(
     documents costs one counted scan of its bucket, not a million
     candidate rows.
 
-    Join strategy is size-adaptive like the minhash probe: a small
-    store broadcasts, a large one keeps its bucketed layout with the
-    batch side hinted ``shuffle_hash`` so the store never sorts or
-    shuffles. Returns ``(new_id, corpus_id, shared, jaccard)`` with
-    ``jaccard >= threshold``."""
-    from connect_server_spark.storage import broadcastable, read_bucketed
-
-    def probe_side(df: DataFrame, store_path: str) -> DataFrame:
-        return df if broadcastable(spark, store_path) else df.hint("shuffle_hash")
+    Store joins go through
+    :func:`~connect_server_spark.operators._pairs.probe_pairs`. Returns
+    ``(new_id, corpus_id, shared, jaccard)`` with ``jaccard >= threshold``."""
+    from connect_server_spark.storage import read_bucketed
 
     posts_path = f"{index_path}/posts"
     fps_path = f"{index_path}/fps"
@@ -1684,10 +1526,8 @@ def winnow_neardup_against_index(
     # at-least-once appends: identical replayed rows must not double-
     # count df or duplicate candidates
     store_posts = store_posts.dropDuplicates(["id", "fp"])
-    probed = store_posts.join(
-        probe_side(n_posts.select("fp").distinct(), posts_path),
-        "fp",
-        "leftsemi",
+    probed = probe_pairs(
+        store_posts, n_posts.select("fp").distinct(), "fp", posts_path, "leftsemi"
     )
     ok_fps = (
         probed.groupBy("fp")
@@ -1696,8 +1536,12 @@ def winnow_neardup_against_index(
         .select("fp")
     )
     cands = (
-        store_posts.withColumnRenamed("id", "corpus_id")
-        .join(probe_side(n_posts.join(ok_fps, "fp", "leftsemi"), posts_path), "fp")
+        probe_pairs(
+            store_posts.withColumnRenamed("id", "corpus_id"),
+            n_posts.join(ok_fps, "fp", "leftsemi"),
+            "fp",
+            posts_path,
+        )
         .select("new_id", "corpus_id")
         .distinct()
     )
@@ -1707,12 +1551,9 @@ def winnow_neardup_against_index(
         .select(F.col("id").alias("corpus_id"), F.col("fps").alias("_fb"))
         .dropDuplicates(["corpus_id"])
     )
-    inter = F.size(F.array_intersect("_fa", "_fb")).cast("long")
-    union = F.size("_fa") + F.size("_fb") - inter
-    return (
-        b.join(probe_side(cands.join(a, "new_id"), fps_path), "corpus_id")
-        .withColumn("shared", inter)
-        .withColumn("jaccard", inter / union)
-        .filter(F.col("jaccard") >= threshold)
-        .select("new_id", "corpus_id", "shared", "jaccard")
+    return verify(
+        cands, a, b, jaccard("_fa", "_fb"), threshold,
+        keys=("new_id", "corpus_id"),
+        extra=(overlap("_fa", "_fb").cast("long").alias("shared"),),
+        store_path=fps_path,
     )

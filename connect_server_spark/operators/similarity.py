@@ -22,9 +22,11 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
+
+from connect_server_spark.operators._pairs import cosine_pairs, top_k
 
 __all__ = [
     "dot_product",
@@ -99,13 +101,7 @@ def cosine_topk(
         F.col(corpus_id),
         cosine_similarity(F.col(probe_vec), F.col(corpus_vec)).alias("cosine"),
     )
-    w = Window.partitionBy(probe_id).orderBy(
-        F.col("cosine").desc(), F.col(corpus_id).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return top_k(scored, k, probe_id, corpus_id)
 
 
 def _srp_hyperplanes(dim: int, tables: int, bits: int, seed: int):
@@ -172,22 +168,11 @@ def ann_lsh_topk(
     # a pair colliding in several tables re-scores at most ``tables`` times
     # (cheap fold over one vector), but the distinct-shuffle then carries
     # 24-byte triples instead of two embedding vectors per candidate.
-    scored = (
-        c_buckets.join(broadcast(p_buckets), ["_table", "_sig"])
-        .select(
-            F.col(probe_id),
-            F.col(corpus_id),
-            cosine_similarity(F.col(probe_vec), F.col(corpus_vec)).alias("cosine"),
-        )
-        .distinct()
-    )
-    w = Window.partitionBy(probe_id).orderBy(
-        F.col("cosine").desc(), F.col(corpus_id).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    scored = cosine_pairs(
+        c_buckets, p_buckets, ["_table", "_sig"],
+        probe_id, probe_vec, corpus_id, corpus_vec,
+    ).distinct()
+    return top_k(scored, k, probe_id, corpus_id)
 
 
 def ivf_assign_udf(centroids, nprobe: int = 1):
@@ -766,28 +751,13 @@ def ivf_topk_indexed(
         F.col(probe_vec),
         F.explode(ivf_assign_udf(cents, nprobe)(F.col(probe_vec))).alias("_cell"),
     )
-    scored = (
-        c_cells.join(broadcast(p_cells), "_cell")
-        .select(
-            F.col(probe_id),
-            F.col(corpus_id),
-            cosine_similarity(F.col(probe_vec), F.col(corpus_vec)).alias(
-                "cosine"
-            ),
-        )
-        # a retried mode="append" ingest can leave duplicate rows in the
-        # cell store (at-least-once, like the minhash index); without
-        # this distinct the same vec_id would occupy two ranks and evict
-        # a legitimate k-th neighbor
-        .distinct()
-    )
-    w = Window.partitionBy(probe_id).orderBy(
-        F.col("cosine").desc(), F.col(corpus_id).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    scored = cosine_pairs(
+        c_cells, p_cells, "_cell", probe_id, probe_vec, corpus_id, corpus_vec
+    ).distinct()
+    # distinct: a retried mode="append" ingest can leave duplicate rows in
+    # the cell store (at-least-once, like the minhash index); the same
+    # vec_id would otherwise occupy two ranks and evict the k-th neighbor
+    return top_k(scored, k, probe_id, corpus_id)
 
 
 class CandidateStarvedRefineWarning(UserWarning):
@@ -943,51 +913,24 @@ def pq_refine_topk(
             "_cell"
         ),
     )
-    cands = (
-        cand_cells.join(broadcast(p_cells), "_cell")
-        .select(
-            F.col(probe_id),
-            F.col(probe_vec),
-            F.col("_cell"),
-            F.col(corpus_id),
-            cosine_similarity(F.col(probe_vec), F.col(corpus_vec)).alias(
-                "_approx"
-            ),
-        )
-        # at-least-once appends: same duplicate-row guard as
-        # ivf_topk_indexed, BEFORE ranking so a duplicate can't occupy
-        # two candidate slots
-        .distinct()
-    )
-    cw = Window.partitionBy(probe_id).orderBy(
-        F.col("_approx").desc(), F.col(corpus_id).asc()
-    )
-    shortlist = (
-        cands.withColumn("_crank", F.row_number().over(cw))
-        .filter(F.col("_crank") <= int(refine_mult) * k)
-        .select(probe_id, probe_vec, "_cell", corpus_id)
-    )
+    # at-least-once appends: same duplicate-row guard as
+    # ivf_topk_indexed, BEFORE ranking so a duplicate can't occupy two
+    # candidate slots
+    cands = cosine_pairs(
+        cand_cells, p_cells, "_cell", probe_id, probe_vec, corpus_id,
+        corpus_vec, name="_approx", carry=(probe_vec, "_cell"),
+    ).distinct()
+    shortlist = top_k(
+        cands, int(refine_mult) * k, probe_id, corpus_id, "_approx", "_crank"
+    ).select(probe_id, probe_vec, "_cell", corpus_id)
     ref_cells = read_ivf_cells(
         spark, live_ref, corpus_id, corpus_vec
     ).withColumnRenamed("cell", "_cell")
-    refined = (
-        ref_cells.join(broadcast(shortlist), [corpus_id, "_cell"])
-        .select(
-            F.col(probe_id),
-            F.col(corpus_id),
-            cosine_similarity(F.col(probe_vec), F.col(corpus_vec)).alias(
-                "cosine"
-            ),
-        )
-        .distinct()
-    )
-    w = Window.partitionBy(probe_id).orderBy(
-        F.col("cosine").desc(), F.col(corpus_id).asc()
-    )
-    return (
-        refined.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    refined = cosine_pairs(
+        ref_cells, shortlist, [corpus_id, "_cell"],
+        probe_id, probe_vec, corpus_id, corpus_vec,
+    ).distinct()
+    return top_k(refined, k, probe_id, corpus_id)
 
 
 def ivf_topk(
@@ -1031,18 +974,10 @@ def ivf_topk(
         F.col(probe_vec),
         F.explode(ivf_assign_udf(cents, nprobe)(F.col(probe_vec))).alias("_cell"),
     )
-    scored = c_cells.join(broadcast(p_cells), "_cell").select(
-        F.col(probe_id),
-        F.col(corpus_id),
-        cosine_similarity(F.col(probe_vec), F.col(corpus_vec)).alias("cosine"),
+    scored = cosine_pairs(
+        c_cells, p_cells, "_cell", probe_id, probe_vec, corpus_id, corpus_vec
     )
-    w = Window.partitionBy(probe_id).orderBy(
-        F.col("cosine").desc(), F.col(corpus_id).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return top_k(scored, k, probe_id, corpus_id)
 
 
 def hard_negatives(
@@ -1100,13 +1035,8 @@ def hard_negatives(
         )
         .filter(F.col("cosine") <= F.lit(max_sim))
     )
-    w = Window.partitionBy(probe_id).orderBy(
-        F.col("cosine").desc(), F.col(corpus_id).asc()
-    )
-    return (
-        negs.withColumn("neg_rank", F.row_number().over(w))
-        .filter(F.col("neg_rank") <= k)
-        .select(probe_id, corpus_id, "cosine", "neg_rank")
+    return top_k(negs, k, probe_id, corpus_id, rank="neg_rank").select(
+        probe_id, corpus_id, "cosine", "neg_rank"
     )
 
 

@@ -1,5 +1,7 @@
 """Unit tests for the dedup operator family on seeded fixtures."""
 
+import os
+
 from pyspark.sql import functions as F
 
 from connect_server_spark.operators.dedup import (
@@ -345,6 +347,60 @@ def test_embedding_lsh_bucket_join_carries_no_vectors(spark):
     assert sig_exchanges, "expected bucket-join exchanges keyed on (_table,_sig)"
     for s in sig_exchanges:
         assert "embedding" not in s, f"vector column in bucket shuffle:\n{s}"
+
+
+def _arrow_eval_nodes(spark, since: int) -> int:
+    """ArrowEvalPython nodes across every SQL execution with id > since,
+    read from the SQL status store (its plan graphs, after AQE updates)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    n = 0
+    execs = store.executionsList().iterator()
+    while execs.hasNext():
+        eid = execs.next().executionId()
+        if eid <= since:
+            continue
+        nodes = store.planGraph(eid).allNodes().iterator()
+        while nodes.hasNext():
+            n += nodes.next().name() == "ArrowEvalPython"
+    return n
+
+
+def test_embedding_lsh_runs_srp_udf_once(spark, tmp_path):
+    """The SRP bucket projection feeds both sides of the self-join; the
+    lazy stage boundary on it makes one ``collect()`` evaluate the SRP
+    pandas UDF in ONE place — one ArrowEvalPython node across all the SQL
+    executions that building and collecting the pairs registers (the
+    boundary's own checkpoint execution included). A parquet-backed input
+    makes the join broadcast at planning time, where the two sides cannot
+    share an exchange: mode ``none`` (boundary off) shows the double
+    pass, proving the count can see it."""
+    from connect_server_spark.execution import checkpoint_mode, set_checkpoint_mode
+    from connect_server_spark.operators.dedup import embedding_neardup_lsh
+
+    base = [1.0, 0.0, 0.5, -0.5] * 16
+    rows = [(i, [x + 0.01 * i for x in base]) for i in range(1, 6)]
+    rows.append((9, [0.0, 1.0, -0.5, 0.5] * 16))
+    spark.createDataFrame(rows, ["vec_id", "embedding"]).write.parquet(
+        str(tmp_path / "emb")
+    )
+    emb = spark.read.parquet(str(tmp_path / "emb"))
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def nodes_for_one_collect(mode: str) -> int:
+        set_checkpoint_mode(spark, mode)
+        execs = store.executionsList()
+        since = execs.last().executionId() if execs.nonEmpty() else -1
+        pairs = embedding_neardup_lsh(emb, threshold=0.9, tables=8, bits=4)
+        assert len(pairs.collect()) == 10  # the five near-parallel twins
+        return _arrow_eval_nodes(spark, since)
+
+    prev = checkpoint_mode(spark)
+    try:
+        assert nodes_for_one_collect("local") == 1
+        assert nodes_for_one_collect("none") == 2
+    finally:
+        set_checkpoint_mode(spark, prev)
 
 
 def test_ngram_jaccard_prefix_filter_prunes_random_corpus(spark):
@@ -1470,3 +1526,31 @@ def test_winnow_guarantee_property_on_mirror():
         assert fa & fb, (k, window, a, b)
 
     check()
+
+
+def test_pair_policies_live_only_in_the_core():
+    """The bucket self-join, the store-probe strategy, the Jaccard score,
+    the span merge and the per-probe rank each exist once, in
+    ``operators/_pairs.py``; the dedup and similarity families call it
+    instead of carrying their own copies."""
+    import re
+
+    ops = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "connect_server_spark", "operators",
+    )
+    policies = {
+        "store-probe strategy": r"broadcastable\(",
+        "Jaccard scoring": r"F\.array_intersect",
+        "span merge": r'F\.lag\("pos"',
+        "per-probe rank": r"Window\.partitionBy\(probe_id\)",
+        "bucket self-join": r'F\.col\(f"l\.\{id_col\}"\) < F\.col\(f"r\.\{id_col\}"\)',
+    }
+    for fname in ("dedup.py", "similarity.py"):
+        with open(os.path.join(ops, fname)) as f:
+            src = f.read()
+        for policy, pat in policies.items():
+            assert not re.search(pat, src), f"{fname} re-implements the {policy}"
+    with open(os.path.join(ops, "_pairs.py")) as f:
+        core = f.read()
+    assert all(re.search(pat, core) for pat in policies.values())

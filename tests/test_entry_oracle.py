@@ -119,8 +119,9 @@ def test_demoted_query_matches_preserved_oracle(spark, sf_dir, name):
 def test_readme_deferred_map_matches_registry():
     """Every rows-only (deferred) query must have a row in README's
     'Deferred queries → pytest evidence' table, and the table must not
-    claim rows for queries that are actually oracle-gated — the audit
-    trail the judge reads stays mechanically true."""
+    claim rows for queries that are actually oracle-gated; README's
+    query / gated / rows-only counts must equal the registry's — the
+    audit trail stays mechanically true."""
     import re
 
     import connect_server_spark.registry as registry
@@ -137,6 +138,14 @@ def test_readme_deferred_map_matches_registry():
     )
     assert mapped - deferred == set(), (
         f"README map rows that are not deferred: {sorted(mapped - deferred)}"
+    )
+    # the prose counts must match the registry too
+    n_all, n_gated = len(registry.all_queries()), len(registry._ORACLE)
+    assert re.search(rf"`queries\(\)` \({n_all}\)", txt), n_all
+    assert re.search(rf"`oracle_sql\(\)` \({n_gated} DuckDB-gated", txt), n_gated
+    assert re.search(rf"the {len(deferred)} rows-only queries", txt), len(deferred)
+    assert re.search(rf"The {len(deferred)} deferred registry entries", sec), len(
+        deferred
     )
 
 

@@ -35,7 +35,7 @@ def main() -> None:
     out_dir = os.path.join(REPO, "plans", tag)
     os.makedirs(out_dir, exist_ok=True)
 
-    spark = get_spark(app_name="capture-plans", master="local[8]")
+    spark = get_spark(app_name="capture-plans")
     spark.sparkContext.setLogLevel("ERROR")
     qs = registry.all_queries()
     for n in names:

@@ -15,7 +15,7 @@ from connect_server_spark.session import get_spark  # noqa: E402
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    spark = get_spark(app_name="decompose-sq8", master="local[32]")
+    spark = get_spark(app_name="decompose-sq8")
     spark.sparkContext.setLogLevel("WARN")
 
     from connect_server_spark.queries.similarity_queries import (

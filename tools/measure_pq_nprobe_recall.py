@@ -35,7 +35,7 @@ def main(sf_dir: str = "/tmp/scale_sf1") -> None:
     )
     from connect_server_spark.session import get_spark
 
-    spark = get_spark(app_name="pq-nprobe-recall", master="local[32]")
+    spark = get_spark(app_name="pq-nprobe-recall")
     spark.sparkContext.setLogLevel("ERROR")
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")

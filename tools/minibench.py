@@ -26,7 +26,7 @@ DEFAULT = (
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     names = (sys.argv[2] if len(sys.argv) > 2 else DEFAULT).split(",")
-    spark = get_spark(app_name="minibench", master="local[32]")
+    spark = get_spark(app_name="minibench")
     spark.sparkContext.setLogLevel("ERROR")
     qs = registry.all_queries()
     names = [n for n in names if n in qs]

@@ -25,7 +25,7 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     names = sys.argv[2].split(",") if len(sys.argv) > 2 else []
     reps = int(sys.argv[3]) if len(sys.argv) > 3 else 2
-    spark = get_spark(app_name="profile-query", master="local[32]")
+    spark = get_spark(app_name="profile-query")
     spark.sparkContext.setLogLevel("ERROR")
     qs = registry.all_queries()
     names = [n for n in names if n in qs] or sorted(qs)

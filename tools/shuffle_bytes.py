@@ -64,7 +64,7 @@ def main() -> None:
     names = (
         sys.argv[2].split(",") if len(sys.argv) > 2 else ["corpus_from_crawl"]
     )
-    spark = get_spark(app_name="shuffle-bytes", master="local[32]")
+    spark = get_spark(app_name="shuffle-bytes")
     spark.sparkContext.setLogLevel("ERROR")
     qs = registry.all_queries()
     for n in names:
